@@ -162,15 +162,15 @@ def time_incremental_update(
         pages = spark.read.parquet(corpus_path)
         import pyspark.sql.functions as F
 
-        split = F.xxhash64("url") % (n_base + n_batch) < n_base
+        split = F.pmod(F.xxhash64("url"), F.lit(n_base + n_batch)) < n_base
         pipe = KGPipeline(spark, os.path.join(tmp, "work"))
         pipe.run(pages.filter(split))  # base crawl, untimed
         batch = pages.filter(~split)
         n_b = batch.count()
-        t0 = time.time()
+        t0 = time.monotonic()
         out = pipe.update(batch, "bench-epoch")
         out["canonical"].count()
-        elapsed = time.time() - t0
+        elapsed = time.monotonic() - t0
         return {
             "update_sec": round(elapsed, 2),
             "update_pages_per_sec": round(n_b / elapsed, 1),

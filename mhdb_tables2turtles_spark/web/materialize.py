@@ -118,14 +118,14 @@ class StagedPipeline:
             return self.spark.read.parquet(path).drop(LINEAGE_COL)
 
         self.log.append(f"compute:{name}")
-        t0 = _time.time()
+        t0 = _time.monotonic()
         df = build().withColumn(LINEAGE_COL, F.spark_partition_id())
         if partitions:
             df = df.repartition(partitions)
         obs = Observation(f"stage_{name}")
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         df.write.mode("overwrite").parquet(path)
-        elapsed = round(_time.time() - t0, 2)
+        elapsed = round(_time.monotonic() - t0, 2)
 
         # per-partition lineage: row counts per source partition, read
         # driver-side from the committed parquet footers (min==max row

@@ -2,7 +2,7 @@
 
     pages (url, warc_ts, html, text, lang)
       -> stage extract   : html -> text (byte-identical per url)
-      -> stage mentions  : Aho-Corasick vocabulary scan
+      -> stage mentions  : token-index vocabulary scan (web/trie.py)
       -> stage linked    : alias candidates + TF-IDF scoring
       -> stage triples   : (subj, pred, obj) emission
       -> stage canonical : connected-components rewrite
@@ -273,9 +273,16 @@ class KGPipeline:
         extra_equiv_edges: DataFrame | None = None,
     ):
         """Incremental re-crawl epoch: run the stage graph over ONLY the
-        new batch, append its triples to the committed table, and
-        re-canonicalize INCREMENTALLY — cost scales with the batch, not
-        the accumulated graph.
+        new batch, append its triples to the committed table, and merge
+        the batch's equivalence edges into the component labels
+        INCREMENTALLY — extraction, linking and the component merge
+        scale with the batch, not the accumulated graph.  The
+        ``canonical_<batch_id>`` stage does not: it rewrites the base
+        plus every epoch's triples through the merged mapping and
+        commits a full copy, so its cost and storage grow with the
+        graph (``web.canonicalize.rewrite_amp`` reads about 13 on the
+        ``kgbench`` ``recrawl_update`` workload).  Making it O(batch) is
+        item 4 of ROADMAP.md.
 
         The incremental canonicalization is EXACTLY equivalent to
         re-running connected components over every equivalence edge
