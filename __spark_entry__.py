@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: KG triple extraction over the sf0.001 documents table —
-    Aho-Corasick mention scan (mapInPandas) + IRI minting with the
+    token-index mention scan (mapInPandas) + IRI minting with the
     reference string kernel (pandas UDF) + triple emission."""
     from mhdb_tables2turtles_spark.queries import q_kg_triples
 

@@ -237,7 +237,7 @@ def main() -> None:
     from mhdb_tables2turtles_spark.queries import QUERIES
 
     # one untimed warmup: JVM/codegen warmup, Python-worker spin-up, and
-    # the per-worker Aho-Corasick automaton build (memoized per worker
+    # the per-worker token-index matcher build (memoized per worker
     # process) otherwise all land on whichever query runs first —
     # kg_mentions was absorbing 4-7s of one-time startup
     QUERIES["kg_mentions"](spark, sf_dir).count()

@@ -26,7 +26,7 @@ from mhdb_tables2turtles_spark.web.mentions import scan_mentions
 # ---------------------------------------------------------------- helpers
 
 # vocabulary for the KG queries over `documents` (single lowercase tokens,
-# so Aho-Corasick word matching == token equality and the SQL oracle can
+# so token-index word matching == token equality and the SQL oracle can
 # express the same scan)
 KG_VOCAB = (
     "spark", "query", "join", "filter", "scan", "sort",
@@ -77,7 +77,7 @@ def _mention_counts(spark, sf_dir) -> DataFrame:
     m = scan_mentions(_docs_as_pages(docs), KG_VOCAB)
     return (
         m.groupBy(F.col("url").cast("long").alias("doc_id"), F.col("surface").alias("term"))
-        .agg(F.count("*").alias("n"))
+        .agg(F.sum("n").alias("n"))
     )
 
 
@@ -92,7 +92,7 @@ _SQL_MENTIONS = f"""
 
 
 def q_kg_mentions(spark, sf_dir):
-    """Aho-Corasick vocabulary scan (mapInPandas) == token-join oracle."""
+    """Token-index vocabulary scan (mapInPandas) == token-join oracle."""
     return _mention_counts(spark, sf_dir)
 
 
@@ -101,7 +101,7 @@ def q_kg_triples(spark, sf_dir, mentions: "DataFrame | None" = None):
 
     ``mentions`` lets a composite query (e.g. kg_canonical_triples) pass
     an already-materialized ``_mention_counts`` result so the
-    Aho-Corasick scan runs once per query, not once per consumer."""
+    token-index scan runs once per query, not once per consumer."""
     m = mentions if mentions is not None else _mention_counts(spark, sf_dir)
     return m.select(
         udfs.iri(
@@ -127,7 +127,7 @@ def q_kg_cooccurrence(spark, sf_dir, mentions: "DataFrame | None" = None):
     (see :func:`q_kg_triples`).
 
     The distinct (doc_id, term) set is localCheckpointed before the
-    self-join: without it BOTH join sides re-execute the Aho-Corasick
+    self-join: without it BOTH join sides re-execute the token-index
     scan (Spark does not reuse the common subtree across self-join
     aliases), and every downstream consumer of the co-mention graph
     pays the dominant scan twice.  At cluster scale the same role is

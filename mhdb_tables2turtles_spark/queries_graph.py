@@ -732,7 +732,7 @@ def _mention_plus_cooc_triples(spark, sf_dir, min_docs=_CHAIN_MIN_DOCS):
     rows plus symmetric entity :coOccursWith entity rows from strong
     co-occurrence — built from ONE checkpointed mention scan (the
     naive composition of q_kg_triples + q_kg_cooccurrence runs the
-    Aho-Corasick document pass twice)."""
+    token-index document pass twice)."""
     from mhdb_tables2turtles_spark.functions import udfs
     from mhdb_tables2turtles_spark.queries import _mention_counts
 
@@ -1625,7 +1625,7 @@ def q_kg_canonical_triples(spark, sf_dir):
         rewrite_triples,
     )
 
-    # one Aho-Corasick scan feeds BOTH the equivalence-edge branch and
+    # one token-index scan feeds BOTH the equivalence-edge branch and
     # the triple-mint branch (same device as kg_rdfs_closure's base
     # materialization — the scan is the dominant cost and CC's eager
     # checkpoints force it during construction anyway)

@@ -45,7 +45,7 @@ def read_page_stream(
 def stream_triples(pages: DataFrame, surfaces: tuple[str, ...]) -> DataFrame:
     """Streaming page batch -> (subject, predicate, object, warc_ts).
 
-    Same extraction + Aho-Corasick scan as the batch pipeline — the
+    Same extraction + token-index scan as the batch pipeline — the
     functions are stateless, so they lift to streams unchanged.  The
     subject IRI is minted from the url (stream-safe: row-local UDF).
     """
@@ -88,7 +88,7 @@ def windowed_mention_rates(
     return (
         mentions.withWatermark("warc_ts", watermark)
         .groupBy(F.window("warc_ts", window).alias("w"), F.col("surface"))
-        .agg(F.count("*").alias("n_mentions"))
+        .agg(F.sum("n").alias("n_mentions"))
         .select(
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),

@@ -1,7 +1,6 @@
 """Mention detection + (subj, pred, obj) triple extraction over web pages.
 
-Arrow-batched ``mapInPandas`` runs the token-index matcher (:mod:`trie`;
-match-set-identical to its Aho-Corasick automaton, differential-tested)
+Arrow-batched ``mapInPandas`` runs the token-index matcher (:mod:`trie`)
 over each page's extracted text; the surface list rides in a
 Spark broadcast and the matcher is memoized per worker.  Everything
 downstream of the scan is built-in DataFrame ops (broadcast joins,
@@ -16,6 +15,8 @@ an object.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -26,10 +27,7 @@ from mhdb_tables2turtles_spark.web.trie import matcher_for
 
 __all__ = ["scan_mentions", "page_entity_triples", "cooccurrence_edges"]
 
-MENTIONS_SCHEMA = "url string, surface string, start int, end int"
-
-# context window (chars) on each side of a match, for the linking scorer
-_CTX = 120
+MENTIONS_SCHEMA = "url string, surface string, n int"
 
 
 def scan_mentions(
@@ -37,7 +35,8 @@ def scan_mentions(
     surfaces: tuple[str, ...],
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
-    """pages(url, text) -> one row per vocabulary occurrence.
+    """pages(url, text) -> one row per (page, surface) found, with ``n``
+    the surface's word-boundary occurrence count on that page.
 
     ``surfaces`` must be lowercase; matching is case-insensitive on
     word boundaries.
@@ -48,11 +47,9 @@ def scan_mentions(
     unbounded join state avoided by construction).
 
     The scan itself is O(page_len + matches) per page: C-speed
-    tokenization, one dict probe per word token, and one per-column
-    append per hit (see :class:`~.trie.TokenIndexMatcher`).  (An earlier
-    revision also computed a per-match prefix space count —
-    O(matches x page_len), quadratic on mention-dense pages — for a
-    column no consumer read; it is deliberately gone.)
+    tokenization, one dict probe per word token, and one counter bump
+    per hit (see :class:`~.trie.TokenIndexMatcher`).  Rows within a page
+    follow first-occurrence order, so the output is deterministic.
     """
     spark = pages.sparkSession
     bc = spark.sparkContext.broadcast(tuple(surfaces))
@@ -62,43 +59,40 @@ def scan_mentions(
     for name in extra:
         out_schema.add(pages.schema[name])
     in_cols = ["url", "text", *extra]
-    out_cols = ["url", "surface", "start", "end", *extra]
+    out_cols = ["url", "surface", "n", *extra]
 
     def scan(batches):
         patterns = bc.value
-        # token-indexed matcher: identical match set to the Aho-Corasick
-        # automaton (differential-tested in tests/test_web_pipeline.py)
-        # at ~2x the scan throughput — this loop is the engine's hottest
         matcher = matcher_for(patterns)
         for pdf in batches:
-            # columnar accumulation: a page yields ~10^2 mentions, so a
-            # 150k-page corpus emits ~10^7 rows per worker — building
-            # them as per-column lists skips one tuple allocation per
-            # row AND pandas' row-to-column transpose (the stage's
-            # former top cost, ahead of the scan itself)
+            # columnar accumulation: building per-column lists skips one
+            # tuple allocation per row AND pandas' row-to-column
+            # transpose (the stage's former top cost, ahead of the scan)
             c_url: list = []
             c_surface: list = []
-            c_start: list = []
-            c_end: list = []
+            c_n: list = []
             c_rest: tuple[list, ...] = tuple([] for _ in extra)
             for url, text, *rest in pdf[in_cols].itertuples(
                 index=False, name=None
             ):
                 if not text:
                     continue
-                low = text.lower()
-                n0 = len(c_start)
-                for start, end, idx in matcher.find_words(low):
-                    c_surface.append(patterns[idx])
-                    c_start.append(start)
-                    c_end.append(end)
-                n_hits = len(c_start) - n0
-                if n_hits:
-                    c_url.extend([url] * n_hits)
+                # keyed by surface, not pattern index, so a repeated
+                # surface still yields one row per (page, surface)
+                counts = Counter(
+                    patterns[idx] for _, _, idx in matcher.find_words(text.lower())
+                )
+                if counts:
+                    c_surface.extend(counts)
+                    c_n.extend(counts.values())
+                    c_url.extend([url] * len(counts))
                     for col, val in zip(c_rest, rest):
-                        col.extend([val] * n_hits)
-            data = {"url": c_url, "surface": c_surface,
-                    "start": c_start, "end": c_end}
+                        col.extend([val] * len(counts))
+            if not c_url:
+                # an empty passthrough list has no dtype; Arrow cannot
+                # cast it to e.g. timestamp, so a hitless batch emits nothing
+                continue
+            data = {"url": c_url, "surface": c_surface, "n": c_n}
             for name, col in zip(extra, c_rest):
                 data[name] = col
             yield pd.DataFrame(data, columns=out_cols)

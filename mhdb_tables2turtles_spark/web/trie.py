@@ -1,112 +1,41 @@
-"""Aho-Corasick multi-pattern matcher (pure Python, dependency-free).
+"""Token-index word-boundary multi-pattern matcher (pure Python,
+dependency-free).
 
 Generalizes the reference's exact-label matching (labels and aliases
-resolved by equality against dimension sheets,
-/root/reference/mhdb/ingest.py:2841-2847, :445-446) to streaming text:
-one pass over a page finds every vocabulary term.
+resolved by equality against dimension sheets, ``mhdb/ingest.py``) to
+streaming text: one pass over a page finds every vocabulary term.
 
 Execution model: the term list rides to executors once (Spark broadcast);
-the automaton is built lazily per worker and memoized by a content
-fingerprint, so a 1000-executor cluster builds it 1000 times total, not
-once per batch or per row.  Matching itself runs inside Arrow-batched
+the matcher is built lazily per worker and memoized by its pattern
+tuple, so a 1000-executor cluster builds it 1000 times total, not once
+per batch or per row.  Matching itself runs inside Arrow-batched
 ``mapInPandas`` (see :mod:`mentions`).
 """
 
 from __future__ import annotations
 
+import functools
 import re
-from collections import deque
 
-__all__ = ["AhoCorasick", "TokenIndexMatcher", "automaton_for", "matcher_for"]
+__all__ = ["TokenIndexMatcher", "matcher_for"]
 
 _WORD_CHARS = frozenset(
     "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789_"
 )
 
 
-class AhoCorasick:
-    """Classic Aho-Corasick with BFS-built failure links.
-
-    ``find(text)`` yields ``(start, end, term_index)`` for every
-    occurrence of every pattern; ``find_words`` filters to matches on
-    word boundaries (the semantics the reference's exact-cell equality
-    implies: a label matches a whole token, not a substring).
-    """
-
-    def __init__(self, patterns: list[str]):
-        self.patterns = list(patterns)
-        # node storage: list of dict[char -> node], parallel arrays
-        self.goto: list[dict] = [{}]
-        self.fail: list[int] = [0]
-        self.out: list[list[int]] = [[]]
-        for idx, pat in enumerate(self.patterns):
-            self._insert(pat, idx)
-        self._build_links()
-
-    def _insert(self, pat: str, idx: int) -> None:
-        node = 0
-        for ch in pat:
-            nxt = self.goto[node].get(ch)
-            if nxt is None:
-                nxt = len(self.goto)
-                self.goto[node][ch] = nxt
-                self.goto.append({})
-                self.fail.append(0)
-                self.out.append([])
-            node = nxt
-        self.out[node].append(idx)
-
-    def _build_links(self) -> None:
-        q: deque[int] = deque()
-        for child in self.goto[0].values():
-            q.append(child)
-        while q:
-            node = q.popleft()
-            for ch, child in self.goto[node].items():
-                q.append(child)
-                f = self.fail[node]
-                while f and ch not in self.goto[f]:
-                    f = self.fail[f]
-                self.fail[child] = self.goto[f].get(ch, 0)
-                if self.fail[child] == child:
-                    self.fail[child] = 0
-                self.out[child] = self.out[child] + self.out[self.fail[child]]
-
-    def find(self, text: str):
-        node = 0
-        goto, fail, out = self.goto, self.fail, self.out
-        for pos, ch in enumerate(text):
-            while node and ch not in goto[node]:
-                node = fail[node]
-            node = goto[node].get(ch, 0)
-            if out[node]:
-                for idx in out[node]:
-                    start = pos - len(self.patterns[idx]) + 1
-                    yield start, pos + 1, idx
-
-    def find_words(self, text: str):
-        """Matches whose ends touch non-word characters (or text edges)."""
-        n = len(text)
-        for start, end, idx in self.find(text):
-            if start > 0 and text[start - 1] in _WORD_CHARS:
-                continue
-            if end < n and text[end] in _WORD_CHARS:
-                continue
-            yield start, end, idx
-
-
 class TokenIndexMatcher:
     """Word-boundary multi-pattern matcher, token-indexed.
 
-    Emits the exact same match SET as ``AhoCorasick.find_words`` (every
-    word-boundary occurrence of every pattern, nested and overlapping
-    included — pinned by a differential test in tests/test_web_pipeline.py)
-    but restructured for CPython speed: ``find_words`` on the automaton
-    steps a Python loop once per CHARACTER with dict lookups and a
-    generator chain; here the only Python-level loop is once per word
-    TOKEN (C-speed ``re.finditer`` tokenization, one dict probe per
-    token, C-speed ``str.startswith`` verification of the few
-    candidates).  Word-boundary semantics make this equivalent: every
+    Emits the exact same match SET as a classic Aho-Corasick automaton
+    filtered to word boundaries (every word-boundary occurrence of every
+    pattern, nested and overlapping included — pinned by a differential
+    test against an automaton oracle in tests/test_web_pipeline.py) but
+    restructured for CPython speed: an automaton steps a Python loop
+    once per CHARACTER with dict lookups and a generator chain; here the
+    only Python-level loop is once per word TOKEN (C-speed
+    ``re.finditer`` tokenization, one dict probe per token, C-speed
+    ``str.startswith`` verification of the few candidates).  Word-boundary semantics make this equivalent: every
     match must start at a token start, so probing each token start
     against an index of patterns-by-first-token finds every candidate,
     and nested patterns sharing a first token ("anxiety", "anxiety
@@ -149,7 +78,7 @@ class TokenIndexMatcher:
     def find_words(self, text: str):
         """Yield ``(start, end, pattern_index)`` for every word-boundary
         occurrence (start preceded by a non-word char or text edge, end
-        followed by one — identical checks to the automaton path)."""
+        followed by one)."""
         n = len(text)
         get = self._index.get
         word = _WORD_CHARS
@@ -175,30 +104,10 @@ class TokenIndexMatcher:
 
 _TOKEN_RE = re.compile(r"[A-Za-z0-9_]+")
 
-_CACHE: dict[tuple, AhoCorasick] = {}
-_MATCHER_CACHE: dict[tuple, TokenIndexMatcher] = {}
 
-
-def _memoized(cache: dict, patterns: tuple, ctor):
-    """Per-worker memoization, bounded for long-lived workers: on
-    overflow past 4 entries keep only the 2 most recent (one shared
-    eviction policy for both matcher kinds)."""
-    m = cache.get(patterns)
-    if m is None:
-        m = cache[patterns] = ctor(list(patterns))
-        if len(cache) > 4:
-            for k in list(cache)[:-2]:
-                del cache[k]
-    return m
-
-
-def automaton_for(patterns: tuple[str, ...]) -> AhoCorasick:
-    """Per-worker memoized automaton (key: the pattern tuple itself —
-    broadcast lists are small; the automaton is the expensive part)."""
-    return _memoized(_CACHE, patterns, AhoCorasick)
-
-
+@functools.lru_cache(maxsize=4)
 def matcher_for(patterns: tuple[str, ...]) -> TokenIndexMatcher:
-    """Per-worker memoized token-index matcher (same contract and match
-    set as :func:`automaton_for`'s ``find_words``; the scan's hot path)."""
-    return _memoized(_MATCHER_CACHE, patterns, TokenIndexMatcher)
+    """Per-worker memoized matcher, keyed by the pattern tuple itself
+    (broadcast lists are small; the index is the expensive part).  A
+    long-lived worker keeps the 4 most recently used tuples."""
+    return TokenIndexMatcher(list(patterns))

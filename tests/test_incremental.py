@@ -47,8 +47,8 @@ def test_incremental_stage_skips_done_batches(spark, tmp_path):
 
     # result identical to a from-scratch single pass
     scratch = mention_fn(pages)
-    a = sorted((r.url, r.surface, r.start) for r in out3.collect())
-    b = sorted((r.url, r.surface, r.start) for r in scratch.collect())
+    a = sorted((r.url, r.surface, r.n) for r in out3.collect())
+    b = sorted((r.url, r.surface, r.n) for r in scratch.collect())
     assert a == b
 
 

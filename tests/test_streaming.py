@@ -95,6 +95,33 @@ def test_windowed_mention_rates(spark, page_drop, tmp_path):
     assert set(df.columns) == {"window_start", "window_end", "surface", "n_mentions"}
 
 
+def test_windowed_mention_rates_values(spark):
+    """Exact per-window counts on a batch frame (the watermark is a
+    no-op there): every occurrence counts, including a surface repeated
+    on one page, and a partition without any mention yields no rows."""
+    from datetime import datetime
+
+    t = lambda m: datetime(2026, 1, 1, 12, m)
+    schema = "url string, warc_ts timestamp, html binary"
+    hits = spark.createDataFrame(
+        [
+            ("u1", t(1), b"<p>music and music and chills</p>"),
+            ("u2", t(3), b"<p>Music gives chills</p>"),
+            ("u3", t(7), b"<p>chills, chills; chills</p>"),
+        ],
+        schema,
+    )
+    no_hits = spark.createDataFrame([("u4", t(8), b"<p>nothing here</p>")], schema)
+    pages = hits.union(no_hits.coalesce(1))
+    rates = windowed_mention_rates(pages, ("music", "chills"), window="5 minutes")
+    got = {(r.window_start, r.surface): r.n_mentions for r in rates.collect()}
+    assert got == {
+        (t(0), "music"): 3,
+        (t(0), "chills"): 2,
+        (t(5), "chills"): 3,
+    }
+
+
 def _drain(stream_df, out, ck):
     q = (
         stream_df.writeStream.format("parquet")

@@ -3,6 +3,8 @@ connected components, staged resume."""
 
 from __future__ import annotations
 
+from collections import Counter, deque
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -11,8 +13,104 @@ from mhdb_tables2turtles_spark.web import vocab as vocab_mod
 from mhdb_tables2turtles_spark.web.canonicalize import connected_components
 from mhdb_tables2turtles_spark.web.extract import extract_text, extract_text_col
 from mhdb_tables2turtles_spark.web.mentions import scan_mentions
+from mhdb_tables2turtles_spark.web.pages import synthesize_pages
 from mhdb_tables2turtles_spark.web.pipeline import KGPipeline, build_corpus
-from mhdb_tables2turtles_spark.web.trie import AhoCorasick
+from mhdb_tables2turtles_spark.web.trie import TokenIndexMatcher, matcher_for
+
+_WORD_CHARS = frozenset(
+    "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789_"
+)
+
+
+class AhoCorasick:
+    """Reference oracle for the scan: classic Aho-Corasick with BFS-built
+    failure links, independent of the production token-index matcher.
+
+    ``find(text)`` yields ``(start, end, term_index)`` for every
+    occurrence of every pattern; ``find_words`` filters to matches on
+    word boundaries (the semantics the reference's exact-cell equality
+    implies: a label matches a whole token, not a substring).
+    """
+
+    def __init__(self, patterns: list[str]):
+        self.patterns = list(patterns)
+        # node storage: list of dict[char -> node], parallel arrays
+        self.goto: list[dict] = [{}]
+        self.fail: list[int] = [0]
+        self.out: list[list[int]] = [[]]
+        for idx, pat in enumerate(self.patterns):
+            self._insert(pat, idx)
+        self._build_links()
+
+    def _insert(self, pat: str, idx: int) -> None:
+        node = 0
+        for ch in pat:
+            nxt = self.goto[node].get(ch)
+            if nxt is None:
+                nxt = len(self.goto)
+                self.goto[node][ch] = nxt
+                self.goto.append({})
+                self.fail.append(0)
+                self.out.append([])
+            node = nxt
+        self.out[node].append(idx)
+
+    def _build_links(self) -> None:
+        q: deque[int] = deque()
+        for child in self.goto[0].values():
+            q.append(child)
+        while q:
+            node = q.popleft()
+            for ch, child in self.goto[node].items():
+                q.append(child)
+                f = self.fail[node]
+                while f and ch not in self.goto[f]:
+                    f = self.fail[f]
+                self.fail[child] = self.goto[f].get(ch, 0)
+                if self.fail[child] == child:
+                    self.fail[child] = 0
+                self.out[child] = self.out[child] + self.out[self.fail[child]]
+
+    def find(self, text: str):
+        node = 0
+        goto, fail, out = self.goto, self.fail, self.out
+        for pos, ch in enumerate(text):
+            while node and ch not in goto[node]:
+                node = fail[node]
+            node = goto[node].get(ch, 0)
+            if out[node]:
+                for idx in out[node]:
+                    start = pos - len(self.patterns[idx]) + 1
+                    yield start, pos + 1, idx
+
+    def find_words(self, text: str):
+        """Matches whose ends touch non-word characters (or text edges)."""
+        n = len(text)
+        for start, end, idx in self.find(text):
+            if start > 0 and text[start - 1] in _WORD_CHARS:
+                continue
+            if end < n and text[end] in _WORD_CHARS:
+                continue
+            yield start, end, idx
+
+
+def _oracle_counts(pages, surfaces) -> dict[tuple[str, str], int]:
+    """Per-(url, surface) word-boundary occurrence counts, by the oracle."""
+    auto = AhoCorasick(list(surfaces))
+    want: Counter = Counter()
+    for r in pages.select("url", "text").collect():
+        for _, _, i in auto.find_words(r.text.lower()):
+            want[r.url, surfaces[i]] += 1
+    return dict(want)
+
+
+def _scan_counts(pages, surfaces) -> dict[tuple[str, str], int]:
+    """``scan_mentions`` output keyed by (url, surface); fails on a
+    duplicate (url, surface) row."""
+    rows = scan_mentions(pages, surfaces).collect()
+    got = {(r.url, r.surface): r.n for r in rows}
+    assert len(got) == len(rows), "duplicate (url, surface) rows"
+    return got
 
 
 # ---------- pure-Python kernels ----------
@@ -45,8 +143,6 @@ def test_token_index_matcher_equals_aho_corasick():
     patterns starting with a non-word char (fallback path) included."""
     import random
 
-    from mhdb_tables2turtles_spark.web.trie import TokenIndexMatcher
-
     vocab = [
         "chill", "chills", "music", "go/no-go task", "anxiety",
         "anxiety disorder", "generalized anxiety disorder", "panic",
@@ -73,6 +169,17 @@ def test_token_index_matcher_equals_aho_corasick():
     # edge cases: text boundaries, empty text
     assert set(matcher.find_words("")) == set()
     assert set(auto.find_words("x y z")) == set(matcher.find_words("x y z"))
+
+
+def test_matcher_for_keeps_recently_used():
+    """A cache hit refreshes recency: the hot tuple survives an
+    overflow that evicts a colder one."""
+    a, b, c, d, e = ((f"lru-{k}",) for k in "abcde")
+    for pats in (a, b, c, d):
+        matcher_for(pats)
+    m = matcher_for(a)
+    matcher_for(e)
+    assert matcher_for(a) is m
 
 
 def test_vocabulary_from_golden():
@@ -109,14 +216,24 @@ def test_pages_deterministic_and_invariant(spark, corpus):
 
 def test_scan_mentions_matches_python(spark, corpus):
     surfaces = ("music", "chills", "study")
-    got = scan_mentions(corpus, surfaces).groupBy("surface").count().collect()
-    got = {r.surface: r["count"] for r in got}
-    auto = AhoCorasick(list(surfaces))
-    want: dict[str, int] = {}
-    for r in corpus.select("text").collect():
-        for s, e, i in auto.find_words(r.text.lower()):
-            want[surfaces[i]] = want.get(surfaces[i], 0) + 1
-    assert got == want
+    assert _scan_counts(corpus, surfaces) == _oracle_counts(corpus, surfaces)
+
+
+def test_scan_mentions_counts_per_page_surface(spark):
+    """One ``(url, surface, n)`` row per page and surface found, ``n`` the
+    oracle's occurrence count — on pages generated from an explicit
+    vocabulary with nested phrases ("anxiety" inside "anxiety disorder")
+    and filler words ("music", "study") that repeat within a page."""
+    pages = synthesize_pages(
+        spark, 30, seed=5, surfaces=("music therapy", "anxiety disorder", "chills"),
+        partitions=2,
+    )
+    surfaces = ("music", "music therapy", "anxiety", "anxiety disorder",
+                "chills", "study")
+    got = _scan_counts(pages, surfaces)
+    assert got == _oracle_counts(pages, surfaces)
+    assert {s for _, s in got} == set(surfaces)
+    assert max(got.values()) > 1
 
 
 def test_connected_components_basic(spark):
